@@ -5,7 +5,8 @@ step, replacing in-place mutation with pure DataFrame flow:
 
   download+append (:118-155)  -> sources.load + append_no_test
   field calcs     (:163-234)  -> conditional_update / blank_to_null / enrich
-  QA reject       (:236-273)  -> reject_duplicates >> reject_unmatched
+  QA reject       (:236-273)  -> qa_reserves: one fused pass, a window count
+                                 (duplicate tags) plus a join (POD membership)
   publish         (:280-286)  -> sources.publish per table
 
 The whole chain is lazy: Catalyst sees download->calc->reject->publish as one
@@ -104,29 +105,25 @@ def qa_reserves(
         flag, same as the anti-join.
     The window and the join are both keyed on TRRR_TAG, so the join reuses
     the window's partitioning (no second fact-side exchange)."""
-    if "__wins_freq" in rrr.columns or "__wins_matched" in rrr.columns:
+    helper = ("__wins_freq", "__wins_matched", "__wins_pod_key")
+    if any(c in rrr.columns for c in helper):
         raise ValueError("qa_reserves: input already carries a QA helper column")
     from pyspark.sql import Window
 
     dup_flag = "Duplicate TRRR_TAG"
     nf_flag = "TRRR_TAG not found in Water POD Table"
     keys = (
-        pod.select(F.col("PNTS_CODE"))
-        .dropDuplicates(["PNTS_CODE"])
+        pod.select(F.col("PNTS_CODE").alias("__wins_pod_key"))
+        .dropDuplicates(["__wins_pod_key"])
         .withColumn("__wins_matched", F.lit(True))
     )
     if broadcast_lookup:
         keys = F.broadcast(keys)
-    tagged = (
-        rrr.withColumn(
-            "__wins_freq", F.count(F.lit(1)).over(Window.partitionBy("TRRR_TAG"))
-        )
-        .join(keys, F.col("TRRR_TAG") == F.col("PNTS_CODE"), "left")
-        .drop("PNTS_CODE")
-    )
+    tagged = rrr.withColumn(
+        "__wins_freq", F.count(F.lit(1)).over(Window.partitionBy("TRRR_TAG"))
+    ).join(keys, F.col("TRRR_TAG") == F.col("__wins_pod_key"), "left")
     is_dup = (F.col("__wins_freq") > 1) & F.col("TRRR_TAG").isNotNull()
     matched = F.col("__wins_matched").isNotNull()
-    helper = ("__wins_freq", "__wins_matched")
     kept = tagged.filter(~is_dup & matched).drop(*helper)
     flag_val = F.when(is_dup, F.lit(dup_flag)).otherwise(F.lit(nf_flag))
     if "REJECT_FLAG" in rrr.columns:

@@ -89,6 +89,22 @@ def test_reserves_qa_reject_semantics(spark, wins_tables):
     assert split.rejected.columns == split.kept.columns + ["REJECT_FLAG"]
 
 
+def test_reserves_qa_keeps_own_pnts_code_column(spark, wins_tables):
+    """A reserves column that happens to share the POD key's name is data:
+    the QA join must neither drop it nor confuse it with the lookup key."""
+    tables, pod = wins_tables
+    rrr = tables["reserves_and_restrictions"].withColumn(
+        "PNTS_CODE", F.concat(F.lit("own-"), F.col("OBJECTID").cast("string"))
+    )
+    split = qa_reserves(transform_reserves(rrr, pod), pod)
+    assert "PNTS_CODE" in split.kept.columns
+    assert split.rejected.columns == split.kept.columns + ["REJECT_FLAG"]
+    kept = {r.OBJECTID: r.PNTS_CODE for r in split.kept.collect()}
+    rej = {r.OBJECTID: r.PNTS_CODE for r in split.rejected.collect()}
+    assert kept == {i: f"own-{i}" for i in (1, 2, 3)}
+    assert rej == {i: f"own-{i}" for i in (4, 5, 6, 7, 8, 9)}
+
+
 def test_full_staging_run(spark, wins_tables):
     tables, pod = wins_tables
     result = run_staging(tables, pod)
